@@ -27,7 +27,7 @@ object Verify {
           .parquet(s"$outDir/$name")
         System.err.println(
           f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      } catch { case e: Throwable =>
+      } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // release any DataFrames a query builder persisted (e.g. the

@@ -181,33 +181,25 @@ class Engine(
     writeAll(extractDelta(seedQuery, deltaBaseline(prevDir), incremental).toSeq,
       outDir, compression)
 
+  /** The export loop: per-table writes (plus media downloads) are
+    * independent Spark jobs, so they run concurrently through
+    * [[graft.PerTable]] (the reference exports serially,
+    * etl/engine.go:127-178).
+    */
   private def writeAll(extracted: Seq[(String, DataFrame)], outDir: String,
-      compression: Option[String]): Map[String, Long] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    // per-table exports are independent Spark jobs — submit them from a
-    // small driver pool so small-table writes overlap the big ones
-    // instead of leaving the cluster idle between driver-serial jobs
-    // (the reference exports serially, etl/engine.go:127-178; Spark's
-    // scheduler is thread-safe for concurrent job submission)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(4, extracted.size)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try Await.result(
-      Future.sequence(extracted.map { case (t, df) => Future {
-        val n = JsonTableIO.write(pgEncoded(t, df), outDir, t, compression)
-        for {
-          sc <- config.schemaFor(t).toSeq
-          c <- sc.columns if df.columns.contains(c.name)
-          // non-fatal like the reference: a config with a null/non-http
-          // download block is skipped, not an NPE
-          d <- Option(c.download)
-          h <- Option(d.http)
-        } graft.io.MediaDownloader.download(df, c.name, h.baseUrl, outDir)
-        t -> n
-      }}), Duration.Inf).toMap
-    finally pool.shutdown()
-  }
+      compression: Option[String]): Map[String, Long] =
+    graft.PerTable.run(spark, extracted.map { case (t, df) => t -> { () =>
+      val n = JsonTableIO.write(pgEncoded(t, df), outDir, t, compression)
+      for {
+        sc <- config.schemaFor(t).toSeq
+        c <- sc.columns if df.columns.contains(c.name)
+        // non-fatal like the reference: a config with a null/non-http
+        // download block is skipped, not an NPE
+        d <- Option(c.download)
+        h <- Option(d.http)
+      } graft.io.MediaDownloader.download(df, c.name, h.baseUrl, outDir)
+      n
+    }}).toMap
 
   /** Artifact-encode pg-typed columns (timestamp arrays → RFC3339,
     * decoded range structs / jsonb maps → their literals) when the

@@ -1,7 +1,8 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, explode}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Observation, Row,
+  SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, count, explode, lit}
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructType}
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
@@ -21,10 +22,11 @@ import scala.jdk.CollectionConverters._
   *
   * The manifest doubles as a COMMIT POINTER: an optional `data_dir`
   * field names the live data dir (`data` when absent — so uncompacted
-  * artifacts stay byte-identical to the original layout). [[compact]]
-  * rewrites into a fresh `data-gN` generation dir and commits by
-  * atomically replacing the one-line manifest, never by renaming data
-  * dirs — a concurrent reader resolves the pointer to either the old
+  * artifacts stay byte-identical to the original layout). [[compact]],
+  * [[mergeArtifacts]] and [[writeGen]] write a fresh `data-gN`
+  * generation dir and commit by atomically replacing the one-line
+  * manifest, never by renaming data dirs — a concurrent reader
+  * resolves the pointer to either the old
   * or the new generation, both complete, with no missing-dir instant.
   * The REPLACED generation is recorded as `stale_dir` and retained
   * until the next maintenance op (one-cycle snapshot retention, the
@@ -48,12 +50,17 @@ object JsonTableIO {
     * compacted, or with no manifest yet).
     */
   def dataPath(outDir: String, tableName: String): Path = {
-    val mp = Paths.get(s"$outDir/$tableName/manifest.json")
     val d =
-      if (Files.isRegularFile(mp)) readManifest(outDir, tableName).dataDir
+      if (manifested(outDir, tableName)) readManifest(outDir, tableName).dataDir
       else "data"
     Paths.get(s"$outDir/$tableName/$d")
   }
+
+  /** Whether `tableName` has a committed partitioned artifact (a
+    * manifest), which takes precedence over a single-file envelope.
+    */
+  private def manifested(outDir: String, tableName: String): Boolean =
+    Files.isRegularFile(Paths.get(s"$outDir/$tableName/manifest.json"))
 
   /** `data`, `data-g1`, `data-g2`, … — the only names a manifest pointer
     * may hold (validated at parse: a tampered pointer must fail loudly,
@@ -115,8 +122,7 @@ object JsonTableIO {
   /** The manifest of a partitioned artifact, when one exists. */
   private def currentManifest(outDir: String,
       tableName: String): Option[Manifest] =
-    if (Files.isRegularFile(Paths.get(s"$outDir/$tableName/manifest.json")))
-      Some(readManifest(outDir, tableName))
+    if (manifested(outDir, tableName)) Some(readManifest(outDir, tableName))
     else None
 
   /** Refuse a rotating op when a plain `data` dir exists next to a
@@ -161,16 +167,10 @@ object JsonTableIO {
     // there (resumed stream) must refuse, not be silently replaced
     currentManifest(outDir, tableName)
       .foreach(guardForeignData(outDir, tableName, _))
-    // the manifest count rides on the write itself via an Observation —
-    // no second computation of `df` and no re-scan of the written files
-    // (both full extra passes at scale)
-    val obs = org.apache.spark.sql.Observation(s"graft_write_$tableName")
-    val writer = df.observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite)
-    compression.fold(writer)(c => writer.option("compression", c))
-      .json(s"$tableDir/data")
-    val count = obs.get("n").asInstanceOf[Long]
+    val count = countedWrite(df, s"graft_write_$tableName") { d =>
+      withCodec(d.write.mode(SaveMode.Overwrite), compression)
+        .json(s"$tableDir/data")
+    }
     // the atomic manifest replace is the commit: it re-points a
     // previously-compacted artifact (data_dir data-gN) back at the fresh
     // plain `data` dir in the same instant it publishes the new count.
@@ -205,9 +205,8 @@ object JsonTableIO {
     val sf = singleFilePath(outDir, tableName)
     // manifest precedence mirrors readManifest: a committed partitioned
     // artifact wins over a stale envelope a crash left behind
-    val manifested =
-      Files.isRegularFile(Paths.get(s"$outDir/$tableName/manifest.json"))
-    if (!manifested && Files.isRegularFile(sf) && isEnvelope(sf)) {
+    if (!manifested(outDir, tableName) && Files.isRegularFile(sf) &&
+        isEnvelope(sf)) {
       // FAILFAST: a truncated envelope under an explicit schema would
       // otherwise PERMISSIVE-parse to one all-null row → explode(null) →
       // a silently EMPTY table; envelopes are small by construction, so
@@ -284,71 +283,124 @@ object JsonTableIO {
   /** Compact an artifact's data dir to `targetParts` files — the
     * small-files maintenance op every long-lived artifact store needs
     * (a streaming sink or a 1000-task writer leaves thousands of tiny
-    * parts; listing + open overhead then dominates reads).
+    * parts; listing + open overhead then dominates reads). Always
+    * rotates a generation; [[compactAuto]] is the form that skips an
+    * artifact that is already compact.
     *
-    * COMMIT PROTOCOL: rewrite into a fresh `data-gN` generation dir,
-    * then commit by atomically replacing the manifest (whose `data_dir`
-    * pointer readers resolve). A concurrent reader sees the old
-    * generation or the new one — both complete; there is no instant
-    * with a missing or half-written dir, and no data-dir rename at all
-    * (which is what lets the same protocol run on object stores, where
-    * the manifest PUT is the commit). The replaced generation is
-    * recorded as `stale_dir` and RETAINED until the next maintenance
-    * op, so a reader that resolved the old pointer just before the swap
-    * still reads a complete dir — one-cycle snapshot retention. Crash
-    * at ANY point leaves either state plus at most an unreferenced
-    * orphan generation, which the next compact/write sweeps. The
-    * manifest count is untouched (compaction must not change the row
-    * count — verified against it).
+    * The rows are rewritten byte-for-byte into a fresh `data-gN`
+    * generation committed by the manifest-pointer swap (see the object
+    * doc): a concurrent reader sees the old generation or the new one,
+    * both complete, and the replaced one is retained one cycle. Crash at
+    * ANY point leaves either state plus at most an unreferenced orphan
+    * generation, which the next compact/write sweeps. The manifest count
+    * is untouched (compaction must not change the row count — verified
+    * against it).
     */
   def compact(spark: SparkSession, outDir: String, tableName: String,
       targetParts: Int, compression: Option[String] = None): Long = {
     recoverInterrupted(outDir, tableName)
+    val cur = dataPath(outDir, tableName)
+    require(Files.isDirectory(cur), s"no partitioned artifact at $cur")
+    rewriteLines(spark, outDir, tableName, Seq(outDir), targetParts, compression)
+  }
+
+  /** Rewrite the rows of `tableName` in each of `sources` (export dirs)
+    * as ONE fresh generation of `outDir/tableName` in `parts` files, and
+    * commit it. The one rewrite behind [[compact]] and
+    * [[mergeArtifacts]].
+    *
+    * BYTE-EXACT: JSON lines pass through as text, untouched. A
+    * parse-and-rewrite (`spark.read.json`) would (a) pay a full
+    * schema-inference scan per input, (b) silently re-type values (a
+    * decimal(18,4) `99999999999999.9999` comes back as `1.0E14`) and
+    * reorder every row's keys alphabetically, and (c) crash on a
+    * legitimately empty artifact (empty inferred schema). Text lines
+    * have none of those failure modes. The written line count, observed
+    * on the write itself, must equal the sum of the inputs' manifest
+    * counts, so a drifted input fails before the commit.
+    */
+  private def rewriteLines(spark: SparkSession, outDir: String,
+      tableName: String, sources: Seq[String], parts: Int,
+      codec: Option[String]): Long = {
+    val expected = sources.map(readManifest(_, tableName).count).sum
+    rotateGeneration(outDir, tableName) { next =>
+      val n = countedWrite(
+          sources.map(jsonLines(spark, _, tableName)).reduce(_ union _),
+          s"graft_rewrite_${tableName}_${next.getFileName}") { d =>
+        withCodec(d.coalesce(math.max(1, parts)).write.mode(SaveMode.Overwrite),
+          codec).text(next.toString)
+      }
+      require(n == expected, s"'$tableName' rewrite row count drifted: " +
+        s"wrote $n lines, manifests say $expected")
+      n
+    }
+  }
+
+  /** A table's rows as JSON text lines: a partitioned artifact's part
+    * files pass through byte-for-byte; a reference single-file envelope
+    * (one JSON document, not lines) is parsed once into lines.
+    */
+  private def jsonLines(spark: SparkSession, dir: String,
+      tableName: String): DataFrame =
+    if (manifested(dir, tableName))
+      spark.read.text(dataPath(dir, tableName).toString)
+    else read(spark, dir, tableName).toJSON.toDF()
+
+  /** On-disk bytes of a table's live data (the envelope file for a
+    * single-file artifact) — the input of the part-count size rule.
+    */
+  private def dataBytes(dir: String, tableName: String): Long =
+    if (manifested(dir, tableName))
+      partFiles(dataPath(dir, tableName)).map(Files.size).sum
+    else Files.size(singleFilePath(dir, tableName))
+
+  /** The commit path of every rotating op: write a fresh `data-gN`
+    * generation with `writeInto` (which returns the row count), then
+    * swap the manifest pointer to it, recording the replaced live dir as
+    * stale. Older generations and orphans are swept after the commit (a
+    * failure there strands only unreferenced dirs, never pointers); a
+    * failure before it deletes `next`, so no full-size orphan is left.
+    */
+  private def rotateGeneration(outDir: String, tableName: String)(
+      writeInto: Path => Long): Long = {
+    Files.createDirectories(Paths.get(s"$outDir/$tableName"))
     currentManifest(outDir, tableName)
       .foreach(guardForeignData(outDir, tableName, _))
     val cur = dataPath(outDir, tableName)
-    require(Files.isDirectory(cur), s"no partitioned artifact at $cur")
+    val prevLive = Some(cur.getFileName.toString)
+      .filter(_ => Files.isDirectory(cur))
     val next = nextGenPath(outDir, tableName)
     var committed = false
     try {
-      // BYTE-EXACT rewrite: JSON lines pass through as text, untouched.
-      // A parse-and-rewrite (spark.read.json) would (a) pay a full
-      // schema-inference scan, (b) silently re-type values (a
-      // decimal(18,4) survives as a double-rounded literal), and
-      // (c) crash on a legitimately empty artifact (empty inferred
-      // schema). Text lines have none of those failure modes.
-      val obs = org.apache.spark.sql.Observation(s"graft_compact_$tableName")
-      val w = spark.read.text(cur.toString)
-        .observe(obs, org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n"))
-        .coalesce(math.max(1, targetParts))
-        .write.mode(SaveMode.Overwrite)
-      compression.fold(w)(c => w.option("compression", c)).text(next.toString)
-      val n = obs.get("n").asInstanceOf[Long]
-      val m = readManifest(outDir, tableName)
-      require(n == m.count,
-        s"compaction row count drifted: wrote $n, manifest says ${m.count}")
-      // THE commit: one atomic pointer replace; the replaced generation
-      // is recorded stale and RETAINED one maintenance cycle so readers
-      // that resolved the old pointer keep a complete dir
+      val n = writeInto(next)
       writeManifestAtomic(outDir, tableName,
-        renderManifest(m.tableName, m.count, next.getFileName.toString,
-          Some(cur.getFileName.toString)))
+        renderManifest(tableName, n, next.getFileName.toString, prevLive))
       committed = true
-      // older generations + orphans of crashed runs; failure here
-      // strands only unreferenced dirs (next run sweeps), never pointers
       cleanupDataDirs(outDir, tableName,
-        keep = Set(next.getFileName.toString, cur.getFileName.toString))
+        keep = Set(next.getFileName.toString) ++ prevLive)
+      Files.deleteIfExists(singleFilePath(outDir, tableName))
       n
     } catch {
-      // never leave a full-size orphaned copy behind on failure — but
-      // once the pointer swapped, `next` is the LIVE generation and must
-      // survive even if post-commit cleanup throws
       case e: Throwable =>
         if (!committed) deleteRecursively(next)
         throw e
     }
   }
+
+  /** Write `df` through `sink` and return its row count, observed on the
+    * write itself — no second computation of `df` and no re-scan of the
+    * written files (both full extra passes at scale).
+    */
+  private def countedWrite(df: DataFrame, name: String)(
+      sink: DataFrame => Unit): Long = {
+    val obs = Observation(name)
+    sink(df.observe(obs, count(lit(1)).as("n")))
+    obs.get("n").asInstanceOf[Long]
+  }
+
+  private def withCodec(w: DataFrameWriter[Row],
+      codec: Option[String]): DataFrameWriter[Row] =
+    codec.fold(w)(c => w.option("compression", c))
 
   private def oldDirPath(outDir: String, tableName: String): Path =
     Paths.get(s"$outDir/$tableName/.data.old")
@@ -366,9 +418,18 @@ object JsonTableIO {
       Files.move(oldDir, dataDir)
   }
 
+  /** Target on-disk size of one part file for the size rule
+    * [[compactAuto]] and [[mergeArtifacts]] share.
+    */
+  val DefaultPartBytes: Long = 128L << 20
+
+  /** The size rule: ceil(bytes / targetPartBytes) parts, at least one. */
+  private def partsFor(bytes: Long, targetPartBytes: Long): Int =
+    math.max(1L, (bytes + targetPartBytes - 1) / targetPartBytes).toInt
+
   /** [[compact]] with an inferred plan where the caller left a knob
-    * unset: part count sized so each output part lands near
-    * `targetPartBytes` of on-disk data (same-codec in/out keeps sizes
+    * unset: part count from the size rule (each output part near
+    * `targetPartBytes` of on-disk data; same-codec in/out keeps sizes
     * comparable), and compression inferred from the existing part
     * extensions — compacting a gzip artifact must not silently rewrite
     * it uncompressed, and an arbitrarily large table must not collapse
@@ -376,32 +437,34 @@ object JsonTableIO {
     * override inference INDEPENDENTLY: `-parts 4` on a gzip artifact
     * still infers gzip, and `-compression zstd` alone still sizes the
     * part count from the data.
+    *
+    * ALREADY COMPACT: when the live dir has no more parts than the
+    * target, all in the target codec, nothing is written — the manifest
+    * count is returned and the artifact (manifest, live dir) stays
+    * exactly as it is. A fresh [[mergeArtifacts]] output is compact by
+    * construction, so the merge → compact lifecycle rewrites the data
+    * once, not twice.
     */
   def compactAuto(spark: SparkSession, outDir: String, tableName: String,
-      targetPartBytes: Long = 128L << 20,
+      targetPartBytes: Long = DefaultPartBytes,
       parts: Option[Int] = None,
-      compression: Option[String] = None): Long =
-    if (parts.isDefined && compression.isDefined)
-      // both knobs pinned: nothing to infer — skip the per-part listing
-      // and stat pass (thousands of metadata ops on exactly the
-      // small-files artifacts compact exists for)
-      compact(spark, outDir, tableName, parts.get, compression)
-    else {
-      recoverInterrupted(outDir, tableName)
-      val dataDir = dataPath(outDir, tableName)
-      require(Files.isDirectory(dataDir), s"no partitioned artifact at $dataDir")
-      val s = Files.list(dataDir)
-      val existing =
-        try s.iterator().asScala.toSeq
-          .filter(p => Files.isRegularFile(p) &&
-            p.getFileName.toString.startsWith("part-"))
-        finally s.close()
-      val bytes = existing.map(Files.size).sum
-      val codec = compression.orElse(inferCodec(existing))
-      val nParts = parts.getOrElse(
-        math.max(1L, (bytes + targetPartBytes - 1) / targetPartBytes).toInt)
-      compact(spark, outDir, tableName, nParts, codec)
-    }
+      compression: Option[String] = None): Long = {
+    recoverInterrupted(outDir, tableName)
+    currentManifest(outDir, tableName)
+      .foreach(guardForeignData(outDir, tableName, _))
+    val live = dataPath(outDir, tableName)
+    require(Files.isDirectory(live), s"no partitioned artifact at $live")
+    val existing = partFiles(live)
+    val codec = compression.orElse(inferCodec(existing))
+    // stat pass only when the part count is not pinned
+    val nParts = parts.getOrElse(
+      partsFor(existing.map(Files.size).sum, targetPartBytes))
+    val target = codec.map(_.toLowerCase)
+      .filterNot(c => c == "none" || c == "uncompressed")
+    if (existing.size <= nParts && existing.forall(p => inferCodec(Seq(p)) == target))
+      readManifest(outDir, tableName).count
+    else compact(spark, outDir, tableName, nParts, codec)
+  }
 
   /** Codec of existing part files, by extension. */
   private def inferCodec(parts: Seq[Path]): Option[String] =
@@ -411,91 +474,78 @@ object JsonTableIO {
         .collectFirst { case (ext, c) if n.endsWith(ext) => c }
     }.headOption
 
-  private def inferCodecIn(dir: Path): Option[String] =
-    if (!Files.isDirectory(dir)) None
+  /** The `part-*` files of a data dir (none when it does not exist). */
+  private def partFiles(dir: Path): Seq[Path] =
+    if (!Files.isDirectory(dir)) Nil
     else {
       val s = Files.list(dir)
-      val parts =
-        try s.iterator().asScala.toSeq.filter(p => Files.isRegularFile(p) &&
-          p.getFileName.toString.startsWith("part-"))
-        finally s.close()
-      inferCodec(parts)
+      try s.iterator().asScala.toList.filter(p => Files.isRegularFile(p) &&
+        p.getFileName.toString.startsWith("part-"))
+      finally s.close()
     }
 
   /** [[write]] into a FRESH GENERATION with a pointer commit instead of
     * the plain `data` dir — the form that is safe when `df` READS from
-    * this same artifact (e.g. merging a delta into its base: Overwrite
-    * on `data` would delete the input mid-plan; a generation write never
-    * touches the source dir, and the atomic manifest swap re-points
-    * readers only after the new rows are fully down). Compression
-    * defaults to the live dir's existing codec — rewriting a gzip
-    * artifact must not silently decompress it. The replaced live dir is
-    * recorded stale and retained one maintenance cycle.
+    * this same artifact (e.g. [[graft.engine.Engine.forget]] rewriting a
+    * table minus the forgotten rows: Overwrite on `data` would delete the
+    * input mid-plan; a generation write never touches the source dir,
+    * and the atomic manifest swap re-points readers only after the new
+    * rows are fully down). Compression defaults to the live dir's
+    * existing codec — rewriting a gzip artifact must not silently
+    * decompress it. The replaced live dir is recorded stale and retained
+    * one maintenance cycle.
     */
   def writeGen(df: DataFrame, outDir: String, tableName: String,
       compression: Option[String] = None): Long = {
-    Files.createDirectories(Paths.get(s"$outDir/$tableName"))
-    currentManifest(outDir, tableName)
-      .foreach(guardForeignData(outDir, tableName, _))
-    val cur = dataPath(outDir, tableName)
-    val prevLive = Some(cur.getFileName.toString)
-      .filter(_ => Files.isDirectory(cur))
-    val codec = compression.orElse(inferCodecIn(cur))
-    val next = nextGenPath(outDir, tableName)
-    val obs = org.apache.spark.sql.Observation(
-      s"graft_writegen_${tableName}_${next.getFileName}")
-    var committed = false
-    try {
-      val writer = df.observe(obs, org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n"))
-        .write.mode(SaveMode.Overwrite)
-      codec.fold(writer)(c => writer.option("compression", c))
-        .json(next.toString)
-      val count = obs.get("n").asInstanceOf[Long]
-      writeManifestAtomic(outDir, tableName,
-        renderManifest(tableName, count, next.getFileName.toString, prevLive))
-      committed = true
-      cleanupDataDirs(outDir, tableName,
-        keep = Set(next.getFileName.toString) ++ prevLive)
-      Files.deleteIfExists(singleFilePath(outDir, tableName))
-      count
-    } catch {
-      // once the pointer swapped, `next` is the live generation and must
-      // survive even if post-commit cleanup throws
-      case e: Throwable =>
-        if (!committed) deleteRecursively(next)
-        throw e
+    val codec = compression.orElse(inferCodec(partFiles(dataPath(outDir, tableName))))
+    rotateGeneration(outDir, tableName) { next =>
+      countedWrite(df, s"graft_writegen_${tableName}_${next.getFileName}") { d =>
+        withCodec(d.write.mode(SaveMode.Overwrite), codec).json(next.toString)
+      }
     }
   }
 
   /** Fold a DELTA export (e.g. `extract -delta`) into its base artifact:
-    * per table, base ∪ delta rewritten as a fresh generation of the
-    * base (the generation write is what makes reading the base while
-    * rewriting it safe — see [[writeGen]]). Tables the delta doesn't
-    * touch (absent or zero-count) are left exactly as they are; a table
-    * new in the delta is copied in whole. Columns are matched by NAME
-    * with missing ones null-filled, so a delta written under a newer
-    * catalog (added nullable column) still folds into an older base —
-    * the same evolution contract the load path honors. Returns
-    * table → merged row count. This completes the incremental
-    * lifecycle: extract → extract -delta (daily) → merge (weekly) →
-    * compact.
+    * per table, the base's and the delta's JSON lines rewritten
+    * byte-for-byte as ONE fresh generation of the base
+    * ([[rewriteLines]]: no schema inference, values and key order kept
+    * as written, the line count checked against base + delta manifest
+    * counts before the commit). Tables the delta doesn't touch (absent
+    * or zero-count) are left exactly as they are; a table new in the
+    * delta is copied in whole.
+    *
+    * SCHEMA EVOLUTION: every line is keyed by column name, so a delta
+    * written under a newer catalog (added nullable column) folds into an
+    * older base as is, and a reader's explicit schema null-fills the
+    * column on the base's lines — the same evolution contract the load
+    * path honors. Only a reference single-file envelope input is parsed
+    * (once, into lines).
+    *
+    * Tables run concurrently ([[graft.PerTable]]); one table's failure
+    * leaves that table's base untouched, lets every other table finish,
+    * and is then raised naming it. Each output is sized by the
+    * [[compactAuto]] rule and takes the explicit codec, else the base's,
+    * else the delta's — so it is already compact and the lifecycle's
+    * compact step writes nothing. Returns table → merged row count. This
+    * completes the incremental lifecycle: extract → extract -delta
+    * (daily) → merge (weekly) → compact.
     */
   def mergeArtifacts(spark: SparkSession, baseDir: String,
       deltaDir: String, compression: Option[String] = None): Map[String, Long] = {
     val baseTables = listTables(baseDir).toSet
-    listTables(deltaDir).flatMap { t =>
-      if (readManifest(deltaDir, t).count == 0L) None
-      else {
-        val d = read(spark, deltaDir, t)
-        val merged =
+    val tasks = listTables(deltaDir).filter(readManifest(deltaDir, _).count > 0L)
+      .map { t =>
+        val sources =
           if (baseTables.contains(t) && readManifest(baseDir, t).count > 0L)
-            read(spark, baseDir, t).unionByName(d, allowMissingColumns = true)
-          else d
-        // codec: explicit, else writeGen infers from the base's live dir
-        Some(t -> writeGen(merged, baseDir, t, compression))
+            Seq(baseDir, deltaDir)
+          else Seq(deltaDir)
+        val parts = partsFor(sources.map(dataBytes(_, t)).sum, DefaultPartBytes)
+        val codec = compression
+          .orElse(inferCodec(partFiles(dataPath(baseDir, t))))
+          .orElse(inferCodec(partFiles(dataPath(deltaDir, t))))
+        t -> (() => rewriteLines(spark, baseDir, t, sources, parts, codec))
       }
-    }.toMap
+    graft.PerTable.run(spark, tasks).toMap
   }
 
   /** Whether `tableName` has a partitioned artifact [[compact]] can work

@@ -629,17 +629,10 @@ object CoreQueries {
     // overlapped from a small driver pool (guide §2.6) and land as
     // LocalRelations that broadcast for free in the prune joins.
     val prevLocal: Map[String, (org.apache.spark.sql.types.StructType,
-        Array[org.apache.spark.sql.Row])] = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(
-        Future.traverse(engine.deltaBaseline(prevDir).toSeq) { case (t, df) =>
-          Future(t -> (df.schema, df.collect()))
-        }, Duration.Inf).toMap
-      finally pool.shutdown()
-    }
+        Array[org.apache.spark.sql.Row])] =
+      graft.PerTable.run(spark, engine.deltaBaseline(prevDir).toSeq.map {
+        case (t, df) => t -> (() => (df.schema, df.collect()))
+      }).toMap
     val prevKeys: Map[String, org.apache.spark.sql.DataFrame] =
       prevLocal.map { case (t, (schema, rows)) =>
         t -> spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)

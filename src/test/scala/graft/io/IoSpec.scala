@@ -382,6 +382,121 @@ class JsonTableIOSpec extends SparkSpec {
       JsonTableIO.read(spark, out, "trunc", Some(schema)).collect()
     }
   }
+
+  /** Part-file lines of a table's live generation, sorted. */
+  private def liveLines(dir: String, t: String): Seq[String] =
+    spark.read.text(JsonTableIO.dataPath(dir, t).toString)
+      .collect().map(_.getString(0)).toSeq.sorted
+
+  /** Every path under a table dir, with each file's modification time. */
+  private def layout(dir: String, t: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.walk(Paths.get(s"$dir/$t"))
+    try s.iterator().asScala.map(p =>
+      if (Files.isRegularFile(p)) s"$p@${Files.getLastModifiedTime(p)}"
+      else p.toString).toSet
+    finally s.close()
+  }
+
+  test("merge is byte-exact: decimals and the writer's key order survive") {
+    val base = Files.createTempDirectory("jsonio-merge-exact").toString
+    val delta = Files.createTempDirectory("jsonio-merge-exact-delta").toString
+    // keys in non-alphabetical order, and a decimal(18,4) no double holds
+    def rows(ids: Seq[Long]) = ids.toDF("id")
+      .withColumn("zeta", concat(lit("z"), col("id")))
+      .withColumn("amt",
+        lit(new java.math.BigDecimal("99999999999999.9999")).cast("decimal(18,4)"))
+      .withColumn("alpha", col("id") * 2)
+    assert(JsonTableIO.write(rows(Seq(1L, 2L)), base, "user") == 2L)
+    assert(JsonTableIO.write(rows(Seq(3L)), delta, "user") == 1L)
+    val expected = (liveLines(base, "user") ++ liveLines(delta, "user")).sorted
+    assert(expected.head.startsWith("""{"id":1,"zeta":"z1","amt":99999999999999.9999,"""),
+      expected.head)
+    assert(JsonTableIO.mergeArtifacts(spark, base, delta) == Map("user" -> 3L))
+    assert(liveLines(base, "user") == expected)
+    assert(JsonTableIO.readManifest(base, "user").count == 3L)
+  }
+
+  test("merge folds a delta with an added nullable column into an older base") {
+    val base = Files.createTempDirectory("jsonio-merge-evolve").toString
+    val delta = Files.createTempDirectory("jsonio-merge-evolve-delta").toString
+    assert(JsonTableIO.write(Seq((1L, "a"), (2L, "b")).toDF("id", "name"),
+      base, "user") == 2L)
+    val v2 = Seq((3L, "c", "c@x.org")).toDF("id", "name", "email")
+    assert(JsonTableIO.write(v2, delta, "user") == 1L)
+    assert(JsonTableIO.mergeArtifacts(spark, base, delta) == Map("user" -> 3L))
+    val back = JsonTableIO.read(spark, base, "user", Some(v2.schema))
+      .orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getString(1), Option(r.getString(2)))).toSeq
+    assert(back == Seq((1L, "a", None), (2L, "b", None), (3L, "c", Some("c@x.org"))))
+  }
+
+  test("merge into a reference envelope base turns it into lines once") {
+    val base = Files.createTempDirectory("jsonio-merge-envelope").toString
+    val delta = Files.createTempDirectory("jsonio-merge-envelope-delta").toString
+    Files.writeString(Paths.get(s"$base/project.json"),
+      "{\n\t\"table_name\": \"project\",\n\t\"count\": 2,\n\t\"data\": [\n" +
+        "\t\t{\n\t\t\t\"id\": 10,\n\t\t\t\"title\": \"p-a\"\n\t\t},\n" +
+        "\t\t{\n\t\t\t\"id\": 20,\n\t\t\t\"title\": \"p-b\"\n\t\t}\n\t]\n}")
+    val d = Seq((30L, "p-c")).toDF("id", "title")
+    assert(JsonTableIO.write(d, delta, "project") == 1L)
+    assert(JsonTableIO.mergeArtifacts(spark, base, delta) == Map("project" -> 3L))
+    // the partitioned generation replaced the envelope
+    assert(!Files.exists(Paths.get(s"$base/project.json")))
+    assert(JsonTableIO.readManifest(base, "project").count == 3L)
+    assert(JsonTableIO.read(spark, base, "project", Some(d.schema))
+      .orderBy("id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq ==
+      Seq((10L, "p-a"), (20L, "p-b"), (30L, "p-c")))
+  }
+
+  test("compactAuto leaves an already-compact artifact untouched") {
+    val out = Files.createTempDirectory("jsonio-compact-noop").toString
+    val df = spark.range(0, 40).toDF("id").coalesce(1)
+    assert(JsonTableIO.write(df, out, "user", Some("gzip")) == 40L)
+    val manifest = Paths.get(s"$out/user/manifest.json")
+    val manifestBefore = Files.readAllBytes(manifest)
+    val before = layout(out, "user")
+    // one part, in the codec compaction would infer (gzip): nothing to do
+    assert(JsonTableIO.compactAuto(spark, out, "user") == 40L)
+    assert(java.util.Arrays.equals(Files.readAllBytes(manifest), manifestBefore))
+    assert(layout(out, "user") == before)
+    assert(!Files.exists(Paths.get(s"$out/user/data-g1")))
+    // a different target codec is not already compact: it rotates
+    assert(JsonTableIO.compactAuto(spark, out, "user",
+      compression = Some("none")) == 40L)
+    assert(JsonTableIO.readManifest(out, "user").dataDir == "data-g1")
+    assert(JsonTableIO.read(spark, out, "user").count() == 40L)
+  }
+
+  test("merge failure stays in its table and is raised after every table finished") {
+    val base = Files.createTempDirectory("jsonio-merge-fail").toString
+    val delta = Files.createTempDirectory("jsonio-merge-fail-delta").toString
+    Seq("a", "b", "c").foreach { t =>
+      assert(JsonTableIO.write(spark.range(0, 10).toDF("id"), base, t) == 10L)
+      assert(JsonTableIO.write(spark.range(10, 15).toDF("id"), delta, t) == 5L)
+    }
+    // b's delta manifest claims a row its lines do not hold
+    Files.writeString(Paths.get(s"$delta/b/manifest.json"),
+      """{"table_name": "b", "count": 6}""")
+    val manifestB = Files.readAllBytes(Paths.get(s"$base/b/manifest.json"))
+    val layoutB = layout(base, "b")
+    val e = intercept[graft.PerTable.Failed] {
+      JsonTableIO.mergeArtifacts(spark, base, delta)
+    }
+    assert(e.tables == Seq("b"), e.getMessage)
+    assert(e.getMessage.contains("for b:") && e.getMessage.contains("drifted"),
+      e.getMessage)
+    // b: manifest and live dir untouched, no orphan generation left
+    assert(java.util.Arrays.equals(
+      Files.readAllBytes(Paths.get(s"$base/b/manifest.json")), manifestB))
+    assert(layout(base, "b") == layoutB)
+    assert(JsonTableIO.read(spark, base, "b").count() == 10L)
+    // the other tables were merged
+    Seq("a", "c").foreach { t =>
+      assert(JsonTableIO.readManifest(base, t).count == 15L)
+      assert(JsonTableIO.read(spark, base, t).count() == 15L)
+    }
+  }
 }
 
 class MediaDownloaderSpec extends SparkSpec {
