@@ -370,9 +370,9 @@ object Main {
             (sel, cents)
           }
           val statusRoot = cli.table match {
-            case "dedup" => s"${cli.path}/dedup_index"
-            case "ann"   => s"${cli.path}/ann_index"
-            case _       => cli.path
+            case "dedup" => graft.ext.DedupIndex.root(cli.path)
+            case "ann"   => graft.ext.AnnIndex.root(cli.path)
+            case _       => cli.path // ClusterIndex's root is its dir
           }
           cli.op match {
             case "" | "build" =>

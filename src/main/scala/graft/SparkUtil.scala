@@ -69,21 +69,4 @@ object SparkUtil {
       case _ => ()
     }
   }
-
-  /** Env-gated (GRAFT_STREAM_PROF) wall-clock lap tracer shared by the
-    * streaming replay and ingest pipelines — one definition so every
-    * call site reports in the same format. Caveat for readers of the
-    * output: a lap around a LAZY construction (e.g.
-    * `localCheckpoint(false)`) times Catalyst planning only; the
-    * execution seconds bill to the lap holding the first downstream
-    * action.
-    */
-  def lap[T](prefix: String, tag: String)(f: => T): T =
-    if (!sys.env.contains("GRAFT_STREAM_PROF")) f
-    else {
-      val t0 = System.nanoTime(); val res = f
-      System.err.println(
-        f"[stream-prof] $prefix$tag ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      res
-    }
 }

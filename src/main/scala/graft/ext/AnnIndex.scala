@@ -34,12 +34,12 @@ import org.apache.spark.sql.functions._
 object AnnIndex {
 
   import graft.io.SegmentLog
+  import graft.io.SegmentLog.{segName, State}
 
-  private def root(dir: String) = s"$dir/ann_index"
+  /** The index root under `dir`. */
+  def root(dir: String) = s"$dir/ann_index"
 
-  private def state(dir: String): SegmentLog.State =
-    SegmentLog.read(root(dir)).getOrElse(
-      sys.error(s"no ann index committed at ${root(dir)}"))
+  private def state(dir: String) = SegmentLog.committed(root(dir), "ann index")
 
   /** The committed vectors across segments. Each segment is read under
     * its own root (cell partition discovery is per-segment; a single
@@ -48,22 +48,23 @@ object AnnIndex {
     * pruning behaves like single-root pruning.
     */
   def rows(spark: SparkSession, dir: String): DataFrame =
-    readIndex(spark, dir)
-
-  private def readIndex(spark: SparkSession, dir: String): DataFrame =
     state(dir).segmentPaths(root(dir))
       .map(p => spark.read.parquet(p))
       .reduce(_.unionByName(_))
 
-  private def writeSegment(vecs: DataFrame, cents: Seq[(Long, Seq[Double])],
-      dir: String, seg: String): Long = {
-    vecs
-      .withColumn("cell",
-        SimilarityQueries.assignCellStruct(vecs.sparkSession, cents, col("v"))
-          .getField("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(s"${root(dir)}/$seg")
-    vecs.sparkSession.read.parquet(s"${root(dir)}/$seg").count()
-  }
+  /** Stage `df` as generation `gen`'s cell-partitioned segment. */
+  private def writeSegment(df: DataFrame, dir: String, gen: Long): Unit =
+    df.write.partitionBy("cell").mode("overwrite")
+      .parquet(s"${root(dir)}/${segName(gen)}")
+
+  private def withCells(vecs: DataFrame, cents: Seq[(Long, Seq[Double])]) =
+    vecs.withColumn("cell",
+      SimilarityQueries.assignCellStruct(vecs.sparkSession, cents, col("v"))
+        .getField("cell"))
+
+  /** Row count of a just-committed state's newest segment. */
+  private def newestRows(spark: SparkSession, dir: String, st: State): Long =
+    spark.read.parquet(st.lastSegmentPath(root(dir))).count()
 
   /** Partition the corpus by its assigned cell. `vecs`: (vec_id, v).
     * Assignment goes through the literal/broadcast crossover
@@ -71,47 +72,35 @@ object AnnIndex {
     * the centroids into codegen, production nlist rides an executor
     * broadcast — both pure projections, zero corpus exchange.
     */
-  def build(vecs: DataFrame, cents: Seq[(Long, Seq[Double])], dir: String): Long = {
-    val r = root(dir)
-    val gen = SegmentLog.nextGen(SegmentLog.read(r))
-    val seg = SegmentLog.segName(gen)
-    val n = writeSegment(vecs, cents, dir, seg)
-    SegmentLog.commit(r, SegmentLog.State(gen, Seq(seg), Map.empty))
-    SegmentLog.cleanup(r)
-    n
-  }
+  def build(vecs: DataFrame, cents: Seq[(Long, Seq[Double])], dir: String): Long =
+    newestRows(vecs.sparkSession, dir, SegmentLog.update(root(dir)) { (_, gen) =>
+      writeSegment(withCells(vecs, cents), dir, gen)
+      State(gen, Seq(segName(gen)), Map.empty)
+    })
 
   /** Fold a new vector batch into the index as a fresh cell-partitioned
     * segment — MUST use the same centroids the index was built with
     * (retrained centroids change assignments: rebuild instead). Returns
     * the batch's indexed row count.
     */
-  def append(vecs: DataFrame, cents: Seq[(Long, Seq[Double])], dir: String): Long = {
-    val r = root(dir)
-    val st = state(dir)
-    val gen = SegmentLog.nextGen(Some(st))
-    val seg = SegmentLog.segName(gen)
-    val n = writeSegment(vecs, cents, dir, seg)
-    SegmentLog.commit(r, SegmentLog.State(gen, st.segments :+ seg, st.extras))
-    n
-  }
+  def append(vecs: DataFrame, cents: Seq[(Long, Seq[Double])], dir: String): Long =
+    newestRows(vecs.sparkSession, dir, SegmentLog.update(root(dir)) { (prev, gen) =>
+      val st = prev.getOrElse(state(dir)) // none committed: fails loudly
+      writeSegment(withCells(vecs, cents), dir, gen)
+      State(gen, st.segments :+ segName(gen), st.extras)
+    })
 
   /** Merge all live segments into one cell-partitioned segment — after
     * many appends, each cell's rows are scattered across every segment
     * (nsegments × nprobe files per probe); compaction restores one file
     * group per cell. Atomic, like every segment-log maintenance op.
     */
-  def compact(spark: SparkSession, dir: String): Long = {
-    val r = root(dir)
-    val st = state(dir)
-    val gen = SegmentLog.nextGen(Some(st))
-    val seg = SegmentLog.segName(gen)
-    readIndex(spark, dir)
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$r/$seg")
-    SegmentLog.commit(r, SegmentLog.State(gen, Seq(seg), st.extras))
-    SegmentLog.cleanup(r)
-    spark.read.parquet(s"$r/$seg").count()
-  }
+  def compact(spark: SparkSession, dir: String): Long =
+    newestRows(spark, dir, SegmentLog.update(root(dir)) { (prev, gen) =>
+      val st = prev.getOrElse(state(dir))
+      writeSegment(rows(spark, dir), dir, gen)
+      State(gen, Seq(segName(gen)), st.extras)
+    })
 
   /** Top-k cosine results per probe query, reading ONLY the probed
     * cells' partitions. `probes`: (query_id, qv); probe cells per query
@@ -131,7 +120,7 @@ object AnnIndex {
     // partition filter must be a LITERAL for planning-time pruning
     val cells = probed.select("cell").distinct()
       .collect().map(_.getLong(0)).toSeq
-    val base = readIndex(spark, dir)
+    val base = rows(spark, dir)
       .filter(col("cell").isin(cells: _*))
     val wRank = Window.partitionBy(col("query_id"))
       .orderBy(desc("cos"), asc("vec_id"))

@@ -64,32 +64,33 @@ import org.apache.spark.sql.functions._
 object ClusterIndex {
 
   import graft.io.SegmentLog
+  import graft.io.SegmentLog.{extraName, segName, State}
 
-  private def state(indexDir: String): SegmentLog.State =
-    SegmentLog.read(indexDir).getOrElse(
-      sys.error(s"no cluster index committed at $indexDir"))
+  private def state(indexDir: String) =
+    SegmentLog.committed(indexDir, "cluster index")
+
+  /** Clustered row count of a just-committed state. */
+  private def clustered(spark: SparkSession, indexDir: String, st: State): Long =
+    spark.read.parquet(st.extraPath(indexDir, "clusters")).count()
 
   /** One-shot build over raw (doc_id, text) documents. Returns the
     * clustered row count.
     */
   def build(docs: DataFrame, indexDir: String): Long = {
     val spark = docs.sparkSession
-    val gen = SegmentLog.nextGen(SegmentLog.read(indexDir))
-    val seg = SegmentLog.segName(gen)
-    val cl = SegmentLog.extraName("clusters", gen)
-    DedupQueries.bandedKeys(DedupQueries.sigsOf(docs))
-      .write.mode("overwrite").parquet(s"$indexDir/$seg")
-    // clusters are derived from the STAGED bands (one column-pruned
-    // read-back), so the two artifacts cannot drift and the expensive
-    // signature pipeline runs exactly once
-    val labels = DedupQueries.ccLabels(
-      pairsFromBands(spark.read.parquet(s"$indexDir/$seg")))
-    labels.write.mode("overwrite").parquet(s"$indexDir/$cl")
-    graft.SparkUtil.release(labels)
-    SegmentLog.commit(indexDir,
-      SegmentLog.State(gen, Seq(seg), Map("clusters" -> cl)))
-    SegmentLog.cleanup(indexDir)
-    spark.read.parquet(s"$indexDir/$cl").count()
+    clustered(spark, indexDir, SegmentLog.update(indexDir) { (_, gen) =>
+      val (seg, cl) = (segName(gen), extraName("clusters", gen))
+      DedupQueries.bandedKeys(DedupQueries.sigsOf(docs))
+        .write.mode("overwrite").parquet(s"$indexDir/$seg")
+      // clusters are derived from the STAGED bands (one column-pruned
+      // read-back), so the two artifacts cannot drift and the expensive
+      // signature pipeline runs exactly once
+      val labels = DedupQueries.ccLabels(
+        pairsFromBands(spark.read.parquet(s"$indexDir/$seg")))
+      labels.write.mode("overwrite").parquet(s"$indexDir/$cl")
+      graft.SparkUtil.release(labels)
+      State(gen, Seq(seg), Map("clusters" -> cl))
+    })
   }
 
   /** The committed assignments: (doc_id, cluster_id). */
@@ -104,93 +105,90 @@ object ClusterIndex {
     */
   def append(batch: DataFrame, indexDir: String): Long = {
     val spark = batch.sparkSession
-    val st = state(indexDir)
-    val gen = SegmentLog.nextGen(Some(st))
-    val seg = SegmentLog.segName(gen)
-    val cl = SegmentLog.extraName("clusters", gen)
-    // narrow checkpoint: the batch bands feed three consumers (touched-
-    // bucket keys, candidate union, the staged segment write) — without
-    // it the md5-per-shingle pipeline re-runs per consumer
-    val newBands = DedupQueries.bandedKeys(DedupQueries.sigsOf(batch))
-      .localCheckpoint(false)
-    val oldBands = spark.read.parquet(st.segmentPaths(indexDir): _*)
-    // only buckets a new doc touches can yield a NEW pair — or cross
-    // the cap; everything else in the persisted bands is skipped by the
-    // semi-joins (at scale this is the index pruned to the batch's
-    // fringe, not a corpus scan). The touched old rows feed three
-    // consumers (delta pairs, overflow counts, retracted members), so
-    // they checkpoint once.
-    val touched = newBands.select("band", "bucket").distinct()
-    val touchedOld = oldBands.join(touched, Seq("band", "bucket"), "left_semi")
-      .localCheckpoint(false)
-    val delta = pairsFromBands(touchedOld.unionByName(newBands))
-      .localCheckpoint(false)
-    val oldClusters = spark.read.parquet(st.extraPath(indexDir, "clusters"))
-    // CAP RETRACTION (see class note): buckets this batch pushes past
-    // the cap had yielded edges while small that the one-shot form
-    // never generates — every cluster holding one of their PRE-BATCH
-    // members must be rebuilt from re-derived current edges
-    val overflowed = touchedOld.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("oc"))
-      .join(newBands.groupBy("band", "bucket").agg(count(lit(1)).as("nc")),
-        Seq("band", "bucket"))
-      .filter(col("oc").between(2, 64) && col("oc") + col("nc") > 64)
-      .select("band", "bucket")
-    val retractedDocs = touchedOld
-      .join(overflowed, Seq("band", "bucket"), "left_semi")
-      .select("doc_id").distinct()
-    val rebuildCids = oldClusters.join(retractedDocs, Seq("doc_id"), "left_semi")
-      .select("cluster_id").distinct().localCheckpoint(false)
-    val rebuildMembers = oldClusters
-      .join(rebuildCids, Seq("cluster_id"), "left_semi")
-      .select("doc_id").localCheckpoint(false)
-    // exact current-edge subgraph of the rebuilt clusters: regenerate
-    // pairs in EVERY bucket a rebuilt member touches (cap on the
-    // current merged population — unchanged buckets reproduce exactly
-    // the pairs they yielded originally), restricted to member-member
-    // (closed by the class-note argument; member↔batch edges ride in
-    // `delta`)
-    val allBands = oldBands.unionByName(newBands)
-    val rbBuckets = allBands.join(rebuildMembers, Seq("doc_id"), "left_semi")
-      .select("band", "bucket").distinct()
-    val rbPairs = pairsFromBands(
-        allBands.join(rbBuckets, Seq("band", "bucket"), "left_semi"))
-      .join(rebuildMembers.withColumnRenamed("doc_id", "doc_a"),
-        Seq("doc_a"), "left_semi")
-      .join(rebuildMembers.withColumnRenamed("doc_id", "doc_b"),
-        Seq("doc_b"), "left_semi")
-    // clusters touched by NEW pairs only (no retraction): their old
-    // edges are all still valid, so star edges member→rep carry their
-    // full membership in one hop (a batch doc can still bridge two of
-    // them — the fixpoint below handles merges)
-    val deltaNodes = delta.select(col("doc_a").as("doc_id"))
-      .union(delta.select(col("doc_b"))).distinct()
-    val starCids = oldClusters.join(deltaNodes, Seq("doc_id"), "left_semi")
-      .select("cluster_id").distinct()
-      .join(rebuildCids, Seq("cluster_id"), "left_anti")
-      .localCheckpoint(false)
-    val starEdges = oldClusters.join(starCids, Seq("cluster_id"), "left_semi")
-      .select(col("doc_id").as("doc_a"), col("cluster_id").as("doc_b"))
-    val relabeled = DedupQueries.ccLabels(
-      delta.unionByName(starEdges).unionByName(rbPairs))
-    val replacedCids = starCids.unionByName(rebuildCids)
-    val untouched = oldClusters.join(replacedCids, Seq("cluster_id"), "left_anti")
-    // the rewrite goes to a FRESH clusters-g<n> (the old generation it
-    // reads stays untouched until the commit below supersedes it — no
-    // read-under-overwrite hazard, no eager materialization needed).
-    // Canonical (doc_id, cluster_id) order: the key-join put cluster_id
-    // first on the untouched side, and the parquet layout must not
-    // drift across appends
-    untouched.unionByName(relabeled).select("doc_id", "cluster_id")
-      .write.mode("overwrite").parquet(s"$indexDir/$cl")
-    newBands.write.mode("overwrite").parquet(s"$indexDir/$seg")
-    // ONE commit flips assignments + the new band segment together
-    SegmentLog.commit(indexDir,
-      SegmentLog.State(gen, st.segments :+ seg, Map("clusters" -> cl)))
-    SegmentLog.cleanup(indexDir)
-    Seq(newBands, touchedOld, delta, rebuildCids, rebuildMembers, starCids)
-      .foreach(graft.SparkUtil.release)
-    spark.read.parquet(s"$indexDir/$cl").count()
+    clustered(spark, indexDir, SegmentLog.update(indexDir) { (prev, gen) =>
+      val st = prev.getOrElse(state(indexDir)) // none committed: fails loudly
+      val (seg, cl) = (segName(gen), extraName("clusters", gen))
+      // narrow checkpoint: the batch bands feed three consumers (touched-
+      // bucket keys, candidate union, the staged segment write) — without
+      // it the md5-per-shingle pipeline re-runs per consumer
+      val newBands = DedupQueries.bandedKeys(DedupQueries.sigsOf(batch))
+        .localCheckpoint(false)
+      val oldBands = spark.read.parquet(st.segmentPaths(indexDir): _*)
+      // only buckets a new doc touches can yield a NEW pair — or cross
+      // the cap; everything else in the persisted bands is skipped by the
+      // semi-joins (at scale this is the index pruned to the batch's
+      // fringe, not a corpus scan). The touched old rows feed three
+      // consumers (delta pairs, overflow counts, retracted members), so
+      // they checkpoint once.
+      val touched = newBands.select("band", "bucket").distinct()
+      val touchedOld = oldBands.join(touched, Seq("band", "bucket"), "left_semi")
+        .localCheckpoint(false)
+      val delta = pairsFromBands(touchedOld.unionByName(newBands))
+        .localCheckpoint(false)
+      val oldClusters = spark.read.parquet(st.extraPath(indexDir, "clusters"))
+      // CAP RETRACTION (see class note): buckets this batch pushes past
+      // the cap had yielded edges while small that the one-shot form
+      // never generates — every cluster holding one of their PRE-BATCH
+      // members must be rebuilt from re-derived current edges
+      val overflowed = touchedOld.groupBy("band", "bucket")
+        .agg(count(lit(1)).as("oc"))
+        .join(newBands.groupBy("band", "bucket").agg(count(lit(1)).as("nc")),
+          Seq("band", "bucket"))
+        .filter(col("oc").between(2, 64) && col("oc") + col("nc") > 64)
+        .select("band", "bucket")
+      val retractedDocs = touchedOld
+        .join(overflowed, Seq("band", "bucket"), "left_semi")
+        .select("doc_id").distinct()
+      val rebuildCids = oldClusters.join(retractedDocs, Seq("doc_id"), "left_semi")
+        .select("cluster_id").distinct().localCheckpoint(false)
+      val rebuildMembers = oldClusters
+        .join(rebuildCids, Seq("cluster_id"), "left_semi")
+        .select("doc_id").localCheckpoint(false)
+      // exact current-edge subgraph of the rebuilt clusters: regenerate
+      // pairs in EVERY bucket a rebuilt member touches (cap on the
+      // current merged population — unchanged buckets reproduce exactly
+      // the pairs they yielded originally), restricted to member-member
+      // (closed by the class-note argument; member↔batch edges ride in
+      // `delta`)
+      val allBands = oldBands.unionByName(newBands)
+      val rbBuckets = allBands.join(rebuildMembers, Seq("doc_id"), "left_semi")
+        .select("band", "bucket").distinct()
+      val rbPairs = pairsFromBands(
+          allBands.join(rbBuckets, Seq("band", "bucket"), "left_semi"))
+        .join(rebuildMembers.withColumnRenamed("doc_id", "doc_a"),
+          Seq("doc_a"), "left_semi")
+        .join(rebuildMembers.withColumnRenamed("doc_id", "doc_b"),
+          Seq("doc_b"), "left_semi")
+      // clusters touched by NEW pairs only (no retraction): their old
+      // edges are all still valid, so star edges member→rep carry their
+      // full membership in one hop (a batch doc can still bridge two of
+      // them — the fixpoint below handles merges)
+      val deltaNodes = delta.select(col("doc_a").as("doc_id"))
+        .union(delta.select(col("doc_b"))).distinct()
+      val starCids = oldClusters.join(deltaNodes, Seq("doc_id"), "left_semi")
+        .select("cluster_id").distinct()
+        .join(rebuildCids, Seq("cluster_id"), "left_anti")
+        .localCheckpoint(false)
+      val starEdges = oldClusters.join(starCids, Seq("cluster_id"), "left_semi")
+        .select(col("doc_id").as("doc_a"), col("cluster_id").as("doc_b"))
+      val relabeled = DedupQueries.ccLabels(
+        delta.unionByName(starEdges).unionByName(rbPairs))
+      val replacedCids = starCids.unionByName(rebuildCids)
+      val untouched = oldClusters.join(replacedCids, Seq("cluster_id"), "left_anti")
+      // the rewrite goes to a FRESH clusters-g<n> (the old generation it
+      // reads stays untouched until the commit below supersedes it — no
+      // read-under-overwrite hazard, no eager materialization needed).
+      // Canonical (doc_id, cluster_id) order: the key-join put cluster_id
+      // first on the untouched side, and the parquet layout must not
+      // drift across appends
+      untouched.unionByName(relabeled).select("doc_id", "cluster_id")
+        .write.mode("overwrite").parquet(s"$indexDir/$cl")
+      newBands.write.mode("overwrite").parquet(s"$indexDir/$seg")
+      Seq(newBands, touchedOld, delta, rebuildCids, rebuildMembers, starCids)
+        .foreach(graft.SparkUtil.release)
+      // ONE commit flips assignments + the new band segment together
+      State(gen, st.segments :+ seg, Map("clusters" -> cl))
+    })
   }
 
   /** Merge all band segments into one (assignments untouched — they are
@@ -198,15 +196,13 @@ object ClusterIndex {
     * path's old-bands side after many ingest batches.
     */
   def compact(spark: SparkSession, indexDir: String): Long = {
-    val st = state(indexDir)
-    val gen = SegmentLog.nextGen(Some(st))
-    val seg = SegmentLog.segName(gen)
-    spark.read.parquet(st.segmentPaths(indexDir): _*)
-      .write.mode("overwrite").parquet(s"$indexDir/$seg")
-    SegmentLog.commit(indexDir,
-      SegmentLog.State(gen, Seq(seg), st.extras))
-    SegmentLog.cleanup(indexDir)
-    spark.read.parquet(s"$indexDir/$seg").count()
+    val st = SegmentLog.update(indexDir) { (prev, gen) =>
+      val st = prev.getOrElse(state(indexDir))
+      spark.read.parquet(st.segmentPaths(indexDir): _*)
+        .write.mode("overwrite").parquet(s"$indexDir/${segName(gen)}")
+      State(gen, Seq(segName(gen)), st.extras)
+    }
+    spark.read.parquet(st.lastSegmentPath(indexDir)).count()
   }
 
   /** Candidate pairs from a (doc_id, band, bucket) frame: one

@@ -55,16 +55,20 @@ import org.apache.spark.sql.functions._
 object DedupIndex {
 
   import graft.io.SegmentLog
+  import graft.io.SegmentLog.{extraName, segName, State}
 
-  private def root(dir: String) = s"$dir/dedup_index"
+  /** The index root under `dir`. */
+  def root(dir: String) = s"$dir/dedup_index"
 
-  private def state(dir: String): SegmentLog.State =
-    SegmentLog.read(root(dir)).getOrElse(
-      sys.error(s"no dedup index committed at ${root(dir)}"))
+  private def state(dir: String) = SegmentLog.committed(root(dir), "dedup index")
 
   /** The committed index rows, as the union of live segments. */
   def rows(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(state(dir).segmentPaths(root(dir)): _*)
+
+  /** Row count of a just-committed state's newest segment. */
+  private def newestRows(spark: SparkSession, dir: String, st: State): Long =
+    spark.read.parquet(st.lastSegmentPath(root(dir))).count()
 
   /** Build the index from scratch over raw documents (doc_id, text):
     * stage one fresh segment, commit it as the ONLY live one (extras are
@@ -73,35 +77,26 @@ object DedupIndex {
     * contract). Returns the indexed row count — read from the written
     * parquet footers (metadata-only), never by recomputing fpSig.
     */
-  def build(docs: DataFrame, dir: String): Long = {
-    val r = root(dir)
-    val gen = SegmentLog.nextGen(SegmentLog.read(r))
-    val seg = SegmentLog.segName(gen)
-    // seed=true marks the original corpus: resurrection re-checks need
-    // "older than doc m" = seed ∨ smaller doc_id, and seed rows are
-    // older than every ingested row whatever their ids
-    DedupQueries.fpSig(docs).withColumn("seed", lit(true))
-      .write.mode("overwrite").parquet(s"$r/$seg")
-    SegmentLog.commit(r, SegmentLog.State(gen, Seq(seg), Map.empty))
-    SegmentLog.cleanup(r)
-    docs.sparkSession.read.parquet(s"$r/$seg").count()
-  }
+  def build(docs: DataFrame, dir: String): Long =
+    newestRows(docs.sparkSession, dir, SegmentLog.update(root(dir)) { (_, gen) =>
+      // seed=true marks the original corpus: resurrection re-checks need
+      // "older than doc m" = seed ∨ smaller doc_id, and seed rows are
+      // older than every ingested row whatever their ids
+      DedupQueries.fpSig(docs).withColumn("seed", lit(true))
+        .write.mode("overwrite").parquet(s"${root(dir)}/${segName(gen)}")
+      State(gen, Seq(segName(gen)), Map.empty)
+    })
 
   /** Fold an ingested batch (ALL of it — see the class note) into the
     * index as a new segment. Returns the batch's indexed row count.
     */
-  def append(docs: DataFrame, dir: String): Long = {
-    val r = root(dir)
-    val st = state(dir)
-    val gen = SegmentLog.nextGen(Some(st))
-    val seg = SegmentLog.segName(gen)
-    DedupQueries.fpSig(docs).withColumn("seed", lit(false))
-      .write.mode("overwrite").parquet(s"$r/$seg")
-    val n = docs.sparkSession.read.parquet(s"$r/$seg").count()
-    SegmentLog.commit(r,
-      SegmentLog.State(gen, st.segments :+ seg, st.extras))
-    n
-  }
+  def append(docs: DataFrame, dir: String): Long =
+    newestRows(docs.sparkSession, dir, SegmentLog.update(root(dir)) { (prev, gen) =>
+      val st = prev.getOrElse(state(dir)) // none committed: fails loudly
+      DedupQueries.fpSig(docs).withColumn("seed", lit(false))
+        .write.mode("overwrite").parquet(s"${root(dir)}/${segName(gen)}")
+      State(gen, st.segments :+ segName(gen), st.extras)
+    })
 
   /** Rewrite all live segments as ONE — the maintenance pass that stops
     * per-batch ingest from accumulating a long segment list (each
@@ -110,16 +105,13 @@ object DedupIndex {
     * fingerprint set it summarizes. Same commit discipline — readers
     * stay on the old segments until the flip.
     */
-  def compact(spark: SparkSession, dir: String): Long = {
-    val r = root(dir)
-    val st = state(dir)
-    val gen = SegmentLog.nextGen(Some(st))
-    val seg = SegmentLog.segName(gen)
-    rows(spark, dir).write.mode("overwrite").parquet(s"$r/$seg")
-    SegmentLog.commit(r, SegmentLog.State(gen, Seq(seg), st.extras))
-    SegmentLog.cleanup(r)
-    spark.read.parquet(s"$r/$seg").count()
-  }
+  def compact(spark: SparkSession, dir: String): Long =
+    newestRows(spark, dir, SegmentLog.update(root(dir)) { (prev, gen) =>
+      val st = prev.getOrElse(state(dir))
+      rows(spark, dir).write.mode("overwrite")
+        .parquet(s"${root(dir)}/${segName(gen)}")
+      State(gen, Seq(segName(gen)), st.extras)
+    })
 
   /** Derive (or re-derive) the index's Bloom sketch artifact from the
     * persisted fingerprints — ONE column-pruned fp scan of the index,
@@ -139,14 +131,13 @@ object DedupIndex {
     * count the sketch covers.
     */
   def writeBloom(spark: SparkSession, dir: String, capacity: Long = 0L): Long = {
-    val st = state(dir)
     val fps = rows(spark, dir).select("fp")
     val n = fps.count()
     val cap = if (capacity > 0) capacity
       else java.lang.Long.highestOneBit(
         math.max(math.max(2 * n, 4096L) * 2 - 1, 1L))
     val bf = fps.stat.bloomFilter("fp", cap, 0.01)
-    commitBloom(spark, dir, st, bf, cap, n)
+    commitBloom(spark, dir, bf, cap, n)
     n
   }
 
@@ -206,12 +197,12 @@ object DedupIndex {
       // brings the next resize forward (the safe side of the guarantee)
       val counted =
         if (meta.isEmpty) covered + newN else math.max(covered, n + newN)
-      commitBloom(spark, dir, state(dir), rebuilt, newCap, counted)
+      commitBloom(spark, dir, rebuilt, newCap, counted)
       counted
     }
     else {
       bf.mergeInPlace(newFps.stat.bloomFilter("fp", cap, 0.01))
-      commitBloom(spark, dir, state(dir), bf, cap, n + newN)
+      commitBloom(spark, dir, bf, cap, n + newN)
       n + newN
     }
   }
@@ -222,27 +213,23 @@ object DedupIndex {
     * fold input.
     */
   def growBloomLatest(spark: SparkSession, dir: String): Long = {
-    val st = state(dir)
-    val segPath = s"${root(dir)}/${st.segments.last}"
+    val segPath = state(dir).lastSegmentPath(root(dir))
     val fps = spark.read.parquet(segPath).select("fp")
     growBloom(spark, dir, fps, spark.read.parquet(segPath).count())
   }
 
   private def commitBloom(spark: SparkSession, dir: String,
-      st: SegmentLog.State, bf: org.apache.spark.util.sketch.BloomFilter,
-      cap: Long, count: Long): Unit = {
-    val r = root(dir)
-    val gen = SegmentLog.nextGen(Some(st))
-    val name = SegmentLog.extraName("bloom", gen)
-    val p = new org.apache.hadoop.fs.Path(s"$r/$name")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try { out.writeLong(BloomMagic); out.writeLong(cap); out.writeLong(count); bf.writeTo(out) }
-    finally out.close()
-    SegmentLog.commit(r,
-      SegmentLog.State(gen, st.segments, st.extras + ("bloom" -> name)))
-    SegmentLog.cleanup(r)
-  }
+      bf: org.apache.spark.util.sketch.BloomFilter, cap: Long, count: Long): Unit =
+    SegmentLog.update(root(dir)) { (prev, gen) =>
+      val st = prev.getOrElse(state(dir))
+      val name = extraName("bloom", gen)
+      val p = new org.apache.hadoop.fs.Path(s"${root(dir)}/$name")
+      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+      val out = fs.create(p, true)
+      try { out.writeLong(BloomMagic); out.writeLong(cap); out.writeLong(count); bf.writeTo(out) }
+      finally out.close()
+      State(gen, st.segments, st.extras + ("bloom" -> name))
+    }
 
   /** Load the committed sketch artifact (driver-side: the serialized
     * bits are the broadcast payload, ~1.2 MB per million fingerprints
@@ -366,119 +353,110 @@ object DedupIndex {
     */
   def ingest(spark: SparkSession, batch: DataFrame, dir: String,
       maintainBloom: Boolean = false): DataFrame = {
-    def lap[T](tag: String)(f: => T): T =
-      graft.SparkUtil.lap("  ingest.", tag)(f)
     val r = root(dir)
-    val st = state(dir)
-    val gen = SegmentLog.nextGen(Some(st))
-    val seg = SegmentLog.segName(gen)
-    val pen = SegmentLog.extraName("pending", gen)
-    val idx = lap("idx-plan")(rows(spark, dir))
     // the batch's md5-per-shingle pipeline runs ONCE into a narrow
     // checkpoint; text rides along for the emit/pending rows
-    val b = lap("fpSig-plan")(DedupQueries.fpSig(batch)
+    val b = DedupQueries.fpSig(batch)
       .join(batch.select("doc_id", "text"), Seq("doc_id"))
       .select("doc_id", "text", "fp", "sig")
-      .localCheckpoint(false))
-    val pendingOld = lap("pending-plan")(st.extras.get("pending")
-      .map(_ => spark.read.parquet(st.extraPath(r, "pending")))
-      .getOrElse(spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), b.schema)))
-    // resolved BEFORE the bucket frame is built: the crossing check only
-    // ever runs with a non-empty pending set, so this single small-read
-    // count decides whether that second consumer exists at all
-    val mayCross = st.extras.contains("pending") &&
-      !lap("pending-isEmpty")(pendingOld.isEmpty)
-    val unioned =
-      idx.select(col("doc_id"), lit(true).as("is_old"), col("fp"), col("sig"))
-        .unionByName(b.select(col("doc_id"), lit(false).as("is_old"),
-          col("fp"), col("sig")))
-    // ONE band-explode + (band,bucket) shuffle of idx∪batch feeds BOTH
-    // the near rule and the cap-crossing check below — the crossing
-    // check used to pay its own full bandsOf(idx) scan per batch, an
-    // O(index) term the ingest contract forbids. Checkpointed (i.e.
-    // materialized rather than streamed through) only when the crossing
-    // check will actually read it a second time — with an empty pending
-    // set the near rule stays the single consumer and no per-batch
-    // bucket materialization is paid.
-    val buckets = lap("parts-plan") {
-      val raw = DedupQueries.bucketMembers(unioned)
-      if (mayCross) raw.localCheckpoint(false) else raw
-    }
-    val (survivors, nearOnly) = lap("core-plan")(
-      DedupQueries.dedupIncrementalParts(
-        unioned, DedupQueries.nearDroppedFromBuckets(buckets)))
-    lap("seg-write")(b.select("doc_id", "fp", "sig").withColumn("seed", lit(false))
-      .write.mode("overwrite").parquet(s"$r/$seg"))
-    def bandsOf(df: DataFrame) = DedupQueries.bandedKeys(
-      df.filter(col("sig").isNotNull).select("doc_id", "sig"))
-    val resurrected: DataFrame =
-      if (mayCross) {
-        // a bucket "crossed" iff its index-side population was cap-legal
-        // ([2,64]) and the batch pushed the union past the cap; tot > 64
-        // with oc ≤ 64 implies the batch touched it, so no separate
-        // touched-bucket semi-join is needed
-        val crossed = lap("crossed")(buckets
-          .select(col("band"), col("bucket"),
-            expr("size(filter(ds, m -> m.is_old))").as("oc"),
-            size(col("ds")).as("tot"))
-          .filter(col("oc").between(2, 64) && col("tot") > 64)
-          .select("band", "bucket")
-          .localCheckpoint(false))
-        // steady state (no bucket crossed — the designed regime) exits
-        // here for the cost of one count over the shared bucket frame;
-        // the pending-candidate pipeline below runs only when a crossing
-        // can actually strand candidates
-        if (lap("crossed-isEmpty")(crossed.isEmpty)) pendingOld.limit(0)
-        else {
-        val candidates = lap("cands")(pendingOld.join(
-            bandsOf(pendingOld).join(crossed, Seq("band", "bucket"), "left_semi")
-              .select("doc_id").distinct(),
-            Seq("doc_id"), "left_semi")
-          .localCheckpoint(false))
-        if (lap("cands-isEmpty")(candidates.isEmpty)) candidates
-        else {
-          val newIdx = idx.unionByName(
-            b.select("doc_id", "fp", "sig").withColumn("seed", lit(false)))
-          // every current member of every candidate bucket, so each
-          // candidate's FULL cause set is re-evaluated at the true
-          // capped populations; foreign buckets these members drag in
-          // are partial, but only candidate verdicts are read
-          val candBuckets = bandsOf(candidates).select("band", "bucket").distinct()
-          val reFrame = newIdx.join(
-              bandsOf(newIdx).join(candBuckets, Seq("band", "bucket"), "left_semi")
-                .select("doc_id").distinct(),
-              Seq("doc_id"), "left_semi")
-            .select(col("doc_id"), col("seed").as("is_old"), col("fp"), col("sig"))
-          candidates.join(DedupQueries.nearDroppedIds(reFrame),
-            Seq("doc_id"), "left_anti")
-        }
-        }
-      } else pendingOld.limit(0)
-    // eager: the emit rows read the OLD pending file, which the commit
-    // below supersedes and cleanup deletes
-    val emitted = lap("emit-ckpt")(b.join(survivors, Seq("doc_id"), "left_semi")
-      .select("doc_id", "text")
-      .unionByName(resurrected.select("doc_id", "text"))
-      .localCheckpoint(true))
-    lap("pending-write")(
+      .localCheckpoint(false)
+    var emitted: DataFrame = null
+    SegmentLog.update(r) { (prev, gen) =>
+      val st = prev.getOrElse(state(dir)) // none committed: fails loudly
+      val (seg, pen) = (segName(gen), extraName("pending", gen))
+      val idx = rows(spark, dir)
+      val pendingOld = st.extras.get("pending")
+        .map(_ => spark.read.parquet(st.extraPath(r, "pending")))
+        .getOrElse(spark.createDataFrame(
+          new java.util.ArrayList[org.apache.spark.sql.Row](), b.schema))
+      // resolved BEFORE the bucket frame is built: the crossing check only
+      // ever runs with a non-empty pending set, so this single small-read
+      // count decides whether that second consumer exists at all
+      val mayCross = st.extras.contains("pending") && !pendingOld.isEmpty
+      val unioned =
+        idx.select(col("doc_id"), lit(true).as("is_old"), col("fp"), col("sig"))
+          .unionByName(b.select(col("doc_id"), lit(false).as("is_old"),
+            col("fp"), col("sig")))
+      // ONE band-explode + (band,bucket) shuffle of idx∪batch feeds BOTH
+      // the near rule and the cap-crossing check below — the crossing
+      // check used to pay its own full bandsOf(idx) scan per batch, an
+      // O(index) term the ingest contract forbids. Checkpointed (i.e.
+      // materialized rather than streamed through) only when the crossing
+      // check will actually read it a second time — with an empty pending
+      // set the near rule stays the single consumer and no per-batch
+      // bucket materialization is paid.
+      val buckets = {
+        val raw = DedupQueries.bucketMembers(unioned)
+        if (mayCross) raw.localCheckpoint(false) else raw
+      }
+      val (survivors, nearOnly) = DedupQueries.dedupIncrementalParts(
+        unioned, DedupQueries.nearDroppedFromBuckets(buckets))
+      b.select("doc_id", "fp", "sig").withColumn("seed", lit(false))
+        .write.mode("overwrite").parquet(s"$r/$seg")
+      def bandsOf(df: DataFrame) = DedupQueries.bandedKeys(
+        df.filter(col("sig").isNotNull).select("doc_id", "sig"))
+      val resurrected: DataFrame =
+        if (mayCross) {
+          // a bucket "crossed" iff its index-side population was cap-legal
+          // ([2,64]) and the batch pushed the union past the cap; tot > 64
+          // with oc ≤ 64 implies the batch touched it, so no separate
+          // touched-bucket semi-join is needed
+          val crossed = buckets
+            .select(col("band"), col("bucket"),
+              expr("size(filter(ds, m -> m.is_old))").as("oc"),
+              size(col("ds")).as("tot"))
+            .filter(col("oc").between(2, 64) && col("tot") > 64)
+            .select("band", "bucket")
+            .localCheckpoint(false)
+          // steady state (no bucket crossed — the designed regime) exits
+          // here for the cost of one count over the shared bucket frame;
+          // the pending-candidate pipeline below runs only when a crossing
+          // can actually strand candidates
+          if (crossed.isEmpty) pendingOld.limit(0)
+          else {
+            val candidates = pendingOld.join(
+                bandsOf(pendingOld).join(crossed, Seq("band", "bucket"), "left_semi")
+                  .select("doc_id").distinct(),
+                Seq("doc_id"), "left_semi")
+              .localCheckpoint(false)
+            if (candidates.isEmpty) candidates
+            else {
+              val newIdx = idx.unionByName(
+                b.select("doc_id", "fp", "sig").withColumn("seed", lit(false)))
+              // every current member of every candidate bucket, so each
+              // candidate's FULL cause set is re-evaluated at the true
+              // capped populations; foreign buckets these members drag in
+              // are partial, but only candidate verdicts are read
+              val candBuckets = bandsOf(candidates).select("band", "bucket").distinct()
+              val reFrame = newIdx.join(
+                  bandsOf(newIdx).join(candBuckets, Seq("band", "bucket"), "left_semi")
+                    .select("doc_id").distinct(),
+                  Seq("doc_id"), "left_semi")
+                .select(col("doc_id"), col("seed").as("is_old"), col("fp"), col("sig"))
+              candidates.join(DedupQueries.nearDroppedIds(reFrame),
+                Seq("doc_id"), "left_anti")
+            }
+          }
+        } else pendingOld.limit(0)
+      // eager: the emit rows read the OLD pending file, which the commit
+      // supersedes and its cleanup deletes
+      emitted = b.join(survivors, Seq("doc_id"), "left_semi")
+        .select("doc_id", "text")
+        .unionByName(resurrected.select("doc_id", "text"))
+        .localCheckpoint(true)
       pendingOld.join(resurrected.select("doc_id"), Seq("doc_id"), "left_anti")
         .unionByName(b.join(nearOnly, Seq("doc_id"), "left_semi"))
         .select("doc_id", "text", "fp", "sig")
-        .write.mode("overwrite").parquet(s"$r/$pen"))
-    lap("commit+cleanup") {
-      SegmentLog.commit(r, SegmentLog.State(gen, st.segments :+ seg,
-        st.extras + ("pending" -> pen)))
-      SegmentLog.cleanup(r)
+        .write.mode("overwrite").parquet(s"$r/$pen")
+      if (mayCross) graft.SparkUtil.release(buckets)
+      State(gen, st.segments :+ seg, st.extras + ("pending" -> pen))
     }
     // per-batch sketch maintenance, folded in HERE so the fingerprints
     // come from the already-checkpointed batch frame instead of a
     // re-read of the just-written segment (growBloomLatest's shape);
     // runs after the commit above, so the commit-then-fold contract
     // growBloom documents holds
-    if (maintainBloom)
-      lap("grow-bloom")(growBloom(spark, dir, b.select("fp"), b.count()))
-    if (mayCross) graft.SparkUtil.release(buckets)
+    if (maintainBloom) growBloom(spark, dir, b.select("fp"), b.count())
     graft.SparkUtil.release(b)
     emitted
   }

@@ -37,12 +37,11 @@ import org.apache.spark.sql.functions._
 object LmModel {
 
   import graft.io.SegmentLog
+  import graft.io.SegmentLog.extraName
 
   private def root(dir: String) = s"$dir/lm_model"
 
-  private def state(dir: String): SegmentLog.State =
-    SegmentLog.read(root(dir)).getOrElse(
-      sys.error(s"no LM model committed at ${root(dir)}"))
+  private def state(dir: String) = SegmentLog.committed(root(dir), "LM model")
 
   /** Train on `docs`' `trainLang` slice and commit atomically.
     * Returns the vocabulary size.
@@ -54,19 +53,16 @@ object LmModel {
       .groupBy("w1").agg(count(lit(1)).as("c1"))
     val bi = TextQueries.lmBigramPairs(train, Seq.empty)
       .groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-    val gen = SegmentLog.nextGen(SegmentLog.read(r))
-    val uniName = SegmentLog.extraName("uni", gen)
-    val biName = SegmentLog.extraName("bi", gen)
-    val metaName = SegmentLog.extraName("meta", gen)
-    uni.write.parquet(s"$r/$uniName")
-    bi.write.parquet(s"$r/$biName")
-    val v = uni.sparkSession.read.parquet(s"$r/$uniName").count()
-    Files.writeString(Paths.get(s"$r/$metaName"),
-      s"""{"train_lang": "$trainLang", "vocab": $v}""")
-    SegmentLog.commit(r, SegmentLog.State(gen, Nil,
-      Map("uni" -> uniName, "bi" -> biName, "meta" -> metaName)))
-    SegmentLog.cleanup(r)
-    v
+    SegmentLog.update(r) { (_, gen) =>
+      val names = Seq("uni", "bi", "meta").map(k => k -> extraName(k, gen)).toMap
+      uni.write.parquet(s"$r/${names("uni")}")
+      bi.write.parquet(s"$r/${names("bi")}")
+      val v = uni.sparkSession.read.parquet(s"$r/${names("uni")}").count()
+      Files.writeString(Paths.get(s"$r/${names("meta")}"),
+        s"""{"train_lang": "$trainLang", "vocab": $v}""")
+      SegmentLog.State(gen, Nil, names)
+    }
+    meta(docs.sparkSession, dir)._2
   }
 
   /** Score `docs` against the committed model — the same dataflow as the

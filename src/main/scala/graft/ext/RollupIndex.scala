@@ -33,12 +33,12 @@ import org.apache.spark.sql.functions._
 object RollupIndex {
 
   import graft.io.SegmentLog
+  import graft.io.SegmentLog.{segName, State}
 
-  private def root(dir: String) = s"$dir/rollup_index"
+  /** The index root under `dir`. */
+  def root(dir: String) = s"$dir/rollup_index"
 
-  private def state(dir: String): SegmentLog.State =
-    SegmentLog.read(root(dir)).getOrElse(
-      sys.error(s"no rollup index committed at ${root(dir)}"))
+  private def state(dir: String) = SegmentLog.committed(root(dir), "rollup index")
 
   /** One batch's partial aggregate: (event_type, day, n, sum_value,
     * users_sketch).
@@ -50,36 +50,32 @@ object RollupIndex {
         sum(col("value").cast("decimal(18,4)")).as("sum_value"),
         expr("hll_sketch_agg(user_id, 14)").as("users_sketch"))
 
-  private def writeSegment(events: DataFrame, dir: String, seg: String): Long = {
-    val p = partial(events)
-    p.coalesce(1).write.mode("overwrite").parquet(s"${root(dir)}/$seg")
-    events.sparkSession.read.parquet(s"${root(dir)}/$seg").count()
-  }
+  /** Stage `cells` as generation `gen`'s one-file segment. */
+  private def writeSegment(cells: DataFrame, dir: String, gen: Long): Unit =
+    cells.coalesce(1).write.mode("overwrite")
+      .parquet(s"${root(dir)}/${segName(gen)}")
+
+  /** Cell count of a just-committed state's newest segment. */
+  private def newestRows(spark: SparkSession, dir: String, st: State): Long =
+    spark.read.parquet(st.lastSegmentPath(root(dir))).count()
 
   /** One-shot build. Returns the segment's cell count. */
-  def build(events: DataFrame, dir: String): Long = {
-    val r = root(dir)
-    val gen = SegmentLog.nextGen(SegmentLog.read(r))
-    val seg = SegmentLog.segName(gen)
-    val n = writeSegment(events, dir, seg)
-    SegmentLog.commit(r, SegmentLog.State(gen, Seq(seg), Map.empty))
-    SegmentLog.cleanup(r)
-    n
-  }
+  def build(events: DataFrame, dir: String): Long =
+    newestRows(events.sparkSession, dir, SegmentLog.update(root(dir)) { (_, gen) =>
+      writeSegment(partial(events), dir, gen)
+      State(gen, Seq(segName(gen)), Map.empty)
+    })
 
   /** Fold a NEW batch of events in: aggregate the batch alone, commit
     * its partials as a fresh segment. Batches may overlap in (type,
     * day) cells arbitrarily — merge-on-read makes the union exact.
     */
-  def append(events: DataFrame, dir: String): Long = {
-    val r = root(dir)
-    val st = state(dir)
-    val gen = SegmentLog.nextGen(Some(st))
-    val seg = SegmentLog.segName(gen)
-    val n = writeSegment(events, dir, seg)
-    SegmentLog.commit(r, SegmentLog.State(gen, st.segments :+ seg, st.extras))
-    n
-  }
+  def append(events: DataFrame, dir: String): Long =
+    newestRows(events.sparkSession, dir, SegmentLog.update(root(dir)) { (prev, gen) =>
+      val st = prev.getOrElse(state(dir)) // none committed: fails loudly
+      writeSegment(partial(events), dir, gen)
+      State(gen, st.segments :+ segName(gen), st.extras)
+    })
 
   /** The maintained rollup: merge every live segment's partials. Exact
     * for n/sum (SUM of partials), mergeable-sketch for distinct users.
@@ -97,17 +93,12 @@ object RollupIndex {
     * cell's partials are scattered across every segment; compaction
     * restores one row per cell (the sketch union makes this lossless).
     */
-  def compact(spark: SparkSession, dir: String): Long = {
-    val r = root(dir)
-    val st = state(dir)
-    val gen = SegmentLog.nextGen(Some(st))
-    val seg = SegmentLog.segName(gen)
-    read(spark, dir).coalesce(1)
-      .write.mode("overwrite").parquet(s"$r/$seg")
-    SegmentLog.commit(r, SegmentLog.State(gen, Seq(seg), st.extras))
-    SegmentLog.cleanup(r)
-    spark.read.parquet(s"$r/$seg").count()
-  }
+  def compact(spark: SparkSession, dir: String): Long =
+    newestRows(spark, dir, SegmentLog.update(root(dir)) { (prev, gen) =>
+      val st = prev.getOrElse(state(dir))
+      writeSegment(read(spark, dir), dir, gen)
+      State(gen, Seq(segName(gen)), st.extras)
+    })
 
   /** Build-or-append — the idempotent entry a streaming ingest calls
     * per micro-batch (first batch creates the index).

@@ -45,6 +45,7 @@ import graft.Tables
 object SearchIndex {
 
   import graft.io.SegmentLog
+  import graft.io.SegmentLog.{extraName, segName, State}
 
   /** Vocabulary hash buckets per segment. Test-scale 16; production
     * scales with vocabulary so each bucket is a few files of a few GB.
@@ -53,9 +54,7 @@ object SearchIndex {
 
   private def root(dir: String) = s"$dir/search_index"
 
-  private def state(dir: String): SegmentLog.State =
-    SegmentLog.read(root(dir)).getOrElse(
-      sys.error(s"no search index committed at ${root(dir)}"))
+  private def state(dir: String) = SegmentLog.committed(root(dir), "search index")
 
   private def bucketOf(word: Column): Column =
     pmod(xxhash64(word), lit(NumBuckets.toLong))
@@ -75,11 +74,10 @@ object SearchIndex {
       .groupBy("doc_id", "dl", "word").agg(count(lit(1)).as("tf"))
       .withColumn("bucket", bucketOf(col("word")))
 
-  private def writeSegment(docs: DataFrame, dir: String, seg: String): Long = {
-    postings(docs).write.partitionBy("bucket")
-      .mode("overwrite").parquet(s"${root(dir)}/$seg")
-    docs.sparkSession.read.parquet(s"${root(dir)}/$seg").count()
-  }
+  /** Stage `postings` as generation `gen`'s bucket-partitioned segment. */
+  private def writeSegment(postings: DataFrame, dir: String, gen: Long): Unit =
+    postings.write.partitionBy("bucket")
+      .mode("overwrite").parquet(s"${root(dir)}/${segName(gen)}")
 
   /** One (seg, n_docs, sum_dl) stats row for a batch — the corpus
     * scalars BM25 needs, captured at index time.
@@ -90,25 +88,24 @@ object SearchIndex {
       .select(lit(seg).as("seg"), col("n_docs"), col("sum_dl"))
 
   private def writeStats(rows: DataFrame, dir: String, gen: Long): String = {
-    val name = SegmentLog.extraName("stats", gen)
+    val name = extraName("stats", gen)
     rows.coalesce(1).write.mode("overwrite").parquet(s"${root(dir)}/$name")
     name
   }
 
+  /** Row count of a just-committed state's newest segment. */
+  private def newestRows(spark: SparkSession, dir: String, st: State): Long =
+    spark.read.parquet(st.lastSegmentPath(root(dir))).count()
+
   /** One-shot build over (doc_id, text) documents. Returns the posting
     * row count.
     */
-  def build(docs: DataFrame, dir: String): Long = {
-    val r = root(dir)
-    val gen = SegmentLog.nextGen(SegmentLog.read(r))
-    val seg = SegmentLog.segName(gen)
-    val n = writeSegment(docs, dir, seg)
-    val stats = writeStats(statsRow(docs, seg), dir, gen)
-    SegmentLog.commit(r, SegmentLog.State(gen, Seq(seg),
-      Map("stats" -> stats)))
-    SegmentLog.cleanup(r)
-    n
-  }
+  def build(docs: DataFrame, dir: String): Long =
+    newestRows(docs.sparkSession, dir, SegmentLog.update(root(dir)) { (_, gen) =>
+      writeSegment(postings(docs), dir, gen)
+      State(gen, Seq(segName(gen)),
+        Map("stats" -> writeStats(statsRow(docs, segName(gen)), dir, gen)))
+    })
 
   /** Fold a batch of NEW documents in (doc_ids must be new — updating a
     * document is a delete + re-add, like every append-only index here).
@@ -117,41 +114,31 @@ object SearchIndex {
     * never read.
     */
   def append(docs: DataFrame, dir: String): Long = {
-    val r = root(dir)
-    val st = state(dir)
     val spark = docs.sparkSession
-    val gen = SegmentLog.nextGen(Some(st))
-    val seg = SegmentLog.segName(gen)
-    val n = writeSegment(docs, dir, seg)
-    val stats = writeStats(
-      spark.read.parquet(st.extraPath(r, "stats"))
-        .unionByName(statsRow(docs, seg)), dir, gen)
-    SegmentLog.commit(r, SegmentLog.State(gen, st.segments :+ seg,
-      st.extras + ("stats" -> stats)))
-    n
+    newestRows(spark, dir, SegmentLog.update(root(dir)) { (prev, gen) =>
+      val st = prev.getOrElse(state(dir)) // none committed: fails loudly
+      writeSegment(postings(docs), dir, gen)
+      val stats = writeStats(spark.read.parquet(st.extraPath(root(dir), "stats"))
+        .unionByName(statsRow(docs, segName(gen))), dir, gen)
+      State(gen, st.segments :+ segName(gen), st.extras + ("stats" -> stats))
+    })
   }
 
   /** Merge all live segments into one (after many appends each bucket's
     * postings are scattered across every segment); the stats rows
     * collapse to one. Atomic swap, orphans swept post-commit.
     */
-  def compact(spark: SparkSession, dir: String): Long = {
-    val r = root(dir)
-    val st = state(dir)
-    val gen = SegmentLog.nextGen(Some(st))
-    val seg = SegmentLog.segName(gen)
-    readIndex(spark, dir)
-      .write.partitionBy("bucket").mode("overwrite").parquet(s"$r/$seg")
-    val stats = writeStats(
-      spark.read.parquet(st.extraPath(r, "stats"))
-        .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-        .select(lit(seg).as("seg"), col("n_docs"), col("sum_dl")),
-      dir, gen)
-    SegmentLog.commit(r, SegmentLog.State(gen, Seq(seg),
-      st.extras + ("stats" -> stats)))
-    SegmentLog.cleanup(r)
-    spark.read.parquet(s"$r/$seg").count()
-  }
+  def compact(spark: SparkSession, dir: String): Long =
+    newestRows(spark, dir, SegmentLog.update(root(dir)) { (prev, gen) =>
+      val st = prev.getOrElse(state(dir))
+      writeSegment(readIndex(spark, dir), dir, gen)
+      val stats = writeStats(
+        spark.read.parquet(st.extraPath(root(dir), "stats"))
+          .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
+          .select(lit(segName(gen)).as("seg"), col("n_docs"), col("sum_dl")),
+        dir, gen)
+      State(gen, Seq(segName(gen)), st.extras + ("stats" -> stats))
+    })
 
   private def readIndex(spark: SparkSession, dir: String): DataFrame =
     state(dir).segmentPaths(root(dir))

@@ -85,16 +85,8 @@ object JsonTableIO {
       json: String): Unit = {
     val dir = Paths.get(s"$outDir/$tableName")
     Files.createDirectories(dir)
-    val tmp = dir.resolve(".manifest.json.tmp")
-    Files.writeString(tmp, json)
-    try Files.move(tmp, dir.resolve("manifest.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    catch {
-      case _: java.nio.file.AtomicMoveNotSupportedException =>
-        Files.move(tmp, dir.resolve("manifest.json"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
+    LocalFs.replace(dir.resolve(".manifest.json.tmp"),
+      dir.resolve("manifest.json"), json)
   }
 
   /** Delete every data generation not in `keep` (live + retained stale),
@@ -113,10 +105,10 @@ object JsonTableIO {
           DataDirName.matches(p.getFileName.toString) &&
           !keep.contains(p.getFileName.toString))
         finally s.close()
-      gens.foreach(deleteRecursively)
+      gens.foreach(LocalFs.deleteRecursively)
     }
-    deleteRecursively(oldDirPath(outDir, tableName))
-    deleteRecursively(Paths.get(s"$outDir/$tableName/.data.compacting"))
+    LocalFs.deleteRecursively(oldDirPath(outDir, tableName))
+    LocalFs.deleteRecursively(Paths.get(s"$outDir/$tableName/.data.compacting"))
   }
 
   /** The manifest of a partitioned artifact, when one exists. */
@@ -382,7 +374,7 @@ object JsonTableIO {
       n
     } catch {
       case e: Throwable =>
-        if (!committed) deleteRecursively(next)
+        if (!committed) LocalFs.deleteRecursively(next)
         throw e
     }
   }
@@ -556,14 +548,6 @@ object JsonTableIO {
     Files.isDirectory(dataPath(outDir, tableName)) ||
       Files.isDirectory(oldDirPath(outDir, tableName))
 
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-      finally walk.close()
-    }
-
   def readManifest(outDir: String, tableName: String): Manifest = {
     val sf = singleFilePath(outDir, tableName)
     // same envelope guard as read()/listTables(): a stray non-envelope
@@ -701,13 +685,7 @@ object JsonTableIO {
     Files.writeString(singleFilePath(outDir, tableName), out)
     // mirror of write(): drop any partitioned artifact for this table so
     // the layouts can never disagree about its contents
-    val tableDir = Paths.get(s"$outDir/$tableName")
-    if (Files.isDirectory(tableDir)) {
-      val walk = Files.walk(tableDir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
-    }
+    LocalFs.deleteRecursively(Paths.get(s"$outDir/$tableName"))
     rows.length.toLong
   }
 

@@ -211,7 +211,7 @@ object RollupRewriteRule extends Rule[LogicalPlan] {
       classify(ne, base).getOrElse(return None)
     }
     // the maintained index, if one is committed
-    val root = s"$idxDir/rollup_index"
+    val root = graft.ext.RollupIndex.root(idxDir)
     val st = SegmentLog.read(root).getOrElse(return None)
     val spark = SparkSession.active
     val repl = spark.read.parquet(st.segmentPaths(root): _*)

@@ -384,10 +384,8 @@ object StreamingOps {
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        def lap[T](tag: String)(f: => T): T =
-          graft.SparkUtil.lap(s"b$bid ", tag)(f)
-        if (!lap("isEmpty")(batch.isEmpty)) {
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        if (!batch.isEmpty) {
           val spark = batch.sparkSession
           // cap-consistent step: survivors of THIS batch plus docs a
           // bucket crossing the ≤64 cap just resurrected (see
@@ -397,9 +395,8 @@ object StreamingOps {
           // call (O(batch) OR-merge off the batch frame ingest already
           // checkpointed — never an O(index) rebuild per micro-batch)
           // so the next batch's prefilter sees them.
-          val emitted = lap("ingest")(graft.ext.DedupIndex.ingest(
-            spark, batch, indexDir, maintainBloom = true))
-          lap("sink-write")(emitted.write.mode("append").parquet(outDir))
+          graft.ext.DedupIndex.ingest(spark, batch, indexDir, maintainBloom = true)
+            .write.mode("append").parquet(outDir)
         }
         () // foreachBatch wants Unit
       }
@@ -549,30 +546,22 @@ object StreamingOps {
     }
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream-ingest-")
     val (idxDir, outDir, ckpt) = (s"$tmp/index", s"$tmp/out", s"$tmp/ckpt")
-    val prof = sys.env.contains("GRAFT_STREAM_PROF")
-    def lap[T](tag: String)(f: => T): T = graft.SparkUtil.lap("", tag)(f)
     // the ingest MUTATES the index (appends each batch), so each run
     // works on a file-copy of the pristine staged one — segment-log
     // pointers are root-relative, so a copied tree is a valid index
-    lap("copy-index")(
-      graft.io.SegmentLog.copyRecursively(s"$staged/idx0", idxDir))
+    graft.io.SegmentLog.copyRecursively(s"$staged/idx0", idxDir)
     val schema = StructType(Seq(StructField("doc_id", LongType),
       StructField("text", StringType)))
     withReplaySession(spark) { s =>
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$staged/in")
       val q = dedupIngestStream(stream, idxDir, outDir, ckpt)
-      try lap("stream")(q.processAllAvailable()) finally {
-        if (prof) q.recentProgress.foreach(p => System.err.println(
-          s"[stream-prof] batch=${p.batchId} durationMs=${p.durationMs}"))
-        q.stop()
-      }
+      try q.processAllAvailable() finally q.stop()
       // eager checkpoint of the (tiny) survivor ids, then drop the
       // per-run tree — repeated bench/verify invocations must not leak
       // an index copy + checkpoint dir per run
-      try lap("final-read")(
-        s.read.parquet(outDir).select("doc_id").orderBy("doc_id")
-          .localCheckpoint(true))
+      try s.read.parquet(outDir).select("doc_id").orderBy("doc_id")
+        .localCheckpoint(true)
       finally graft.io.SegmentLog.deleteRecursively(tmp.toString)
     }
   }
